@@ -480,6 +480,11 @@ def simhash_near_dups(sim: DataFrame, max_hamming: int = 3,
             f"pigeonhole violated: n_blocks({n_blocks}) - "
             f"blocks_per_key({blocks_per_key}) must be >= "
             f"max_hamming({max_hamming})")
+    if split_hot_buckets is not None and split_hot_buckets < 1:
+        # a granule < 1 makes the grid side S <= 0, pmod(hash, S) null
+        # and every join key null: an empty pair set, not an error
+        raise ValueError(f"split_hot_buckets must be a granule >= 1 "
+                         f"(or None), got {split_hot_buckets}")
     width = 64 // n_blocks
     mask = (1 << width) - 1
     blocks = [(F.shiftrightunsigned(F.col("simhash"), width * c)

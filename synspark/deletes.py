@@ -17,10 +17,10 @@ This module reproduces both phases over the parquet store:
 - ``delete_docs`` writes tombstoned ``doc_id``s to a new
   ``deletes/batch=del-K`` partition and commits them through the one
   atomic ``meta.json`` write (``delete_batches``/``n_deleted``).
-  Query paths (search / search_batch / count_matches / score_naive)
-  route each shard's tombstones to its worker with a broadcast range
-  join + cogroup — the tombstone set never rides through the driver
-  and scales with churn, not corpus.
+  The same commit writes a shard-routed mirror
+  (``deletes_routed/``), so query paths (search / search_batch /
+  count_matches / score_naive) hand each shard worker its tombstones
+  without routing them per query.
 - ``upsert_docs`` is ES's index-by-key: resolve the keys' current
   doc_ids against the COMMITTED docmap, append the new versions, and
   tombstone the old ids in the SAME meta commit (a crash anywhere
@@ -100,8 +100,11 @@ def _write_tombstones(spark: SparkSession, store: IndexStore,
         leftover = store.path / root / f"batch={part}"
         if leftover.exists():
             leftover.rmtree()
-    new = ids.filter((F.col("doc_id") >= 0)
-                     & (F.col("doc_id") < id_bound)).distinct()
+    # ids may arrive as int (a caller's frame, an int-keyed docmap):
+    # tombstones are stored as DELETES_SCHEMA's long
+    new = (ids.select(F.col("doc_id").cast("long"))
+           .filter((F.col("doc_id") >= 0)
+                   & (F.col("doc_id") < id_bound)).distinct())
     if meta.delete_batches:
         new = new.join(store.deletes(spark), "doc_id", "left_anti")
     if meta.purged_batches:
@@ -400,10 +403,9 @@ def auto_merge(spark: SparkSession, store: IndexStore,
 def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
     from .index_store import _clear_uncommitted
     from .indexer import DOCSTATS_TERM, SEGMENT_SCHEMA
-    from .query import _deletes_by_shard
 
     meta = store.meta()
-    dels = _deletes_by_shard(spark, store, meta)
+    dels = store.deletes_routed(spark, meta)
     if dels is None:
         return store  # no tombstones anywhere
     counts = {int(r["shard"]): int(r["nd"]) for r in
@@ -463,7 +465,7 @@ def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
         .otherwise(F.lit(-1))
     delta_part = f"merge-at-{old_shards}"
     touched = cand + sorted(new_ids.values())
-    (spark.read.parquet(seg_dir)
+    (store._read(spark, "segments")
      .filter(F.col("shard").isin(touched))
      .filter(F.col("term") != DOCSTATS_TERM)
      .groupBy("term")
@@ -480,7 +482,7 @@ def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
     # bounded by the tombstone count)
     from .indexer import decode_docstats_rows
     old_stats = decode_docstats_rows(
-        spark.read.parquet(seg_dir)
+        store._read(spark, "segments")
         .filter(F.col("shard").isin(cand))
         .filter(F.col("term") == DOCSTATS_TERM))
     purged = dels.filter(F.col("shard").isin(cand)).select("doc_id") \
@@ -534,7 +536,7 @@ def _merge_locked(spark, store, shards, min_frac, source) -> IndexStore:
     remaining.unpersist()
 
     # manifest lineage for the replacement shards; mark originals dead
-    lineage = (spark.read.parquet(seg_dir)
+    lineage = (store._read(spark, "segments")
                .filter(F.col("shard").isin(sorted(new_ids.values())))
                .groupBy("shard")
                .agg(F.count("*").alias("rows"),
@@ -739,10 +741,9 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
     live corpus (test-pinned). The old index is untouched (crash-safe,
     like ``compact_index``)."""
     from .indexer import DOCSTATS_TERM, SEGMENT_SCHEMA
-    from .query import _deletes_by_shard
 
     meta = store.meta()
-    dels = _deletes_by_shard(spark, store, meta)
+    dels = store.deletes_routed(spark, meta)
     if dels is None:
         raise ValueError("no tombstones to purge — use compact_index")
 
@@ -860,7 +861,7 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
          .parquet(str(dst.path / "docmap")))
 
     def _termstats_job():
-        (spark.read.parquet(str(dst.path / "segments"))
+        (dst._read(spark, "segments")
          .filter(F.col("term") != DOCSTATS_TERM)
          .groupBy("term")
          .agg(F.sum("n_docs").cast("long").alias("df"),
@@ -872,12 +873,12 @@ def purge_merge(spark: SparkSession, store: IndexStore, out_dir: str,
     _run_concurrent(_docstats_job, _docmap_job)
     _termstats_job()  # reads the purged segments written above
 
-    row = spark.read.parquet(str(dst.path / "docstats")) \
+    row = dst._read(spark, "docstats") \
         .agg(F.sum("dl").alias("t")).collect()[0]
     total_dl = int(row["t"] or 0)
 
     build_id = uuid.uuid4().hex
-    stats = (spark.read.parquet(str(dst.path / "segments"))
+    stats = (dst._read(spark, "segments")
              .groupBy("shard")
              .agg(F.count("*").alias("rows"),
                   (F.sum(F.length("doc_bytes"))

@@ -41,8 +41,11 @@ def _run_concurrent(*fns) -> None:
     """Run jobs concurrently (Spark schedules concurrent jobs from
     separate threads — removes the per-job serial floor) and RE-RAISE
     the first failure after all join: a swallowed thread exception
-    would let the meta commit proceed over missing/partial stats."""
-    import threading
+    would let the meta commit proceed over missing/partial stats.
+    ``InheritableThread`` carries the caller's job group/description
+    into each thread, so the jobs stay labelled with the operation
+    that ran them."""
+    from pyspark import InheritableThread
     errs: list = []
 
     def wrap(f):
@@ -53,7 +56,7 @@ def _run_concurrent(*fns) -> None:
                 errs.append(e)
         return g
 
-    ts = [threading.Thread(target=wrap(f), daemon=True) for f in fns]
+    ts = [InheritableThread(target=wrap(f), daemon=True) for f in fns]
     for t in ts:
         t.start()
     for t in ts:
@@ -73,16 +76,45 @@ def _timed(stage: str):
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (IntegerType, LongType, StringType,
+                               StructField, StructType)
 
 from .corpus import with_sha256
 from .docids import assign_doc_ids
-from .indexer import (DOCSTATS_TERM, build_doc_stats,
+from .indexer import (DOCSTATS_TERM, SEGMENT_SCHEMA, build_doc_stats,
                       build_segments_maponly, decode_docstats_rows,
                       encode_segments_from_tokens, tokenize_corpus)
 from .synonyms import SynonymDict
 from .tokenizer import TokenizerConfig
 
 DEFAULT_SHARDS = 8
+
+
+def _schema(*cols) -> StructType:
+    return StructType([StructField(n, t) for n, t in cols])
+
+
+# Read schemas of the batch-partitioned store datasets (segments use
+# indexer.SEGMENT_SCHEMA, the docmap follows the corpus). Every reader
+# passes its schema to spark.read, so a scan never runs Spark's
+# one-task parquet footer-inference job first; the writers produce
+# exactly these types (pinned by test_store_schemas).
+TERMSTATS_SCHEMA = _schema(("term", StringType()), ("df", LongType()),
+                           ("cf", LongType()), ("batch", StringType()))
+DOCSTATS_SCHEMA = _schema(("doc_id", LongType()), ("dl", IntegerType()),
+                          ("batch", StringType()))
+DELETES_SCHEMA = _schema(("doc_id", LongType()), ("batch", StringType()))
+DELETES_ROUTED_SCHEMA = _schema(("shard", IntegerType()),
+                                ("doc_id", LongType()),
+                                ("batch", StringType()))
+PURGED_SCHEMA = DELETES_SCHEMA
+STORE_SCHEMAS = {"segments": SEGMENT_SCHEMA,
+                 "termstats": TERMSTATS_SCHEMA,
+                 "docstats": DOCSTATS_SCHEMA,
+                 "deletes": DELETES_SCHEMA,
+                 "deletes_routed": DELETES_ROUTED_SCHEMA,
+                 "purged": PURGED_SCHEMA}
+
 # bump when SEGMENT_SCHEMA / block encoding / store layout changes
 # (v3: batch-partitioned docmap, meta.text_col, commit-gated readers;
 #  v4: meta.json is the single atomic commit point — idempotence
@@ -184,9 +216,8 @@ class IndexMeta:
     # assigns each tombstone to its doc-range shard runs ONCE at
     # delete-commit time instead of inside every query (round-4 task
     # #5 — at a million live tombstones the per-query routing cost
-    # 8-11s vs 5.3s clean). Writers keep this equal to delete_batches;
-    # readers fall back to query-time routing for any batch without a
-    # mirror (pre-v8 stores).
+    # 8-11s vs 5.3s clean). Every v8 writer keeps this equal to
+    # delete_batches, so readers use the mirror unconditionally.
     routed_batches: list = field(default_factory=list)
 
 
@@ -217,6 +248,8 @@ class IndexStore:
         # index build changes. Cuts one Spark job per repeated query.
         self._df_cache: dict = {}
         self._df_cache_build: str | None = None
+        self._docmap_schema_cache: StructType | None = None
+        self._docmap_schema_build: str | None = None
 
     # ---------- metadata ----------
     def meta(self) -> IndexMeta:
@@ -292,13 +325,31 @@ class IndexStore:
         return sorted(parts)
 
     # ---------- readers ----------
+    def _read(self, spark: SparkSession, name: str,
+              ignore_missing: bool = False, schema: StructType | None = None,
+              parts: list[str] | None = None) -> DataFrame:
+        """The one scan of store dataset ``name`` — every read goes
+        through here with a known schema (``STORE_SCHEMAS``, or the
+        docmap's per-handle one), so no read pays a footer-inference
+        job. Ungated: the public readers below add the commit gates.
+        ``parts`` reads only those ``batch=`` partition directories
+        (``basePath`` keeps the partition column)."""
+        reader = spark.read.schema(schema or STORE_SCHEMAS[name])
+        if ignore_missing:
+            reader = reader.option("ignoreMissingFiles", "true")
+        root = self.path / name
+        if parts is None:
+            return reader.parquet(str(root))
+        return reader.option("basePath", str(root)).parquet(
+            *[str(root / f"batch={p}") for p in parts])
+
     # segments/docmap reads are COMMIT-GATED on meta (written last):
     # shard < n_shards / doc_id < n_docs hides partitions left by a
     # crashed append until its retry commits — cheap O(1) predicates
     # that partition-prune, the parquet-native analogue of a snapshot.
     def segments(self, spark: SparkSession) -> DataFrame:
         meta = self.meta()
-        df = spark.read.parquet(str(self.path / "segments"))
+        df = self._read(spark, "segments")
         df = df.filter(F.col("shard") < meta.n_shards)
         if meta.dead_shards:
             # shards replaced by an incremental merge: their rewritten
@@ -317,29 +368,29 @@ class IndexStore:
         remaining window: a reader that planned against an older meta
         while the vacuum reclaimed a folded delta."""
         meta = self.meta()
-        df = spark.read.option("ignoreMissingFiles", "true") \
-            .parquet(str(self.path / "docstats"))
+        df = self._read(spark, "docstats", ignore_missing=True)
         return (df.filter(F.col("batch")
                           .isin(self._committed_data_parts(meta)))
                 .filter(F.col("doc_id") < meta.n_docs)
                 .select("doc_id", "dl"))
 
+    def _termstats_deltas(self, spark: SparkSession) -> DataFrame:
+        """Committed per-batch (term, df, cf) delta rows. Gate: only
+        partitions named in meta.stats_batches (the commit record)
+        participate, hiding crashed-append deltas. ignoreMissingFiles
+        covers a reader planned against an older meta racing the
+        post-fold vacuum."""
+        return (self._read(spark, "termstats", ignore_missing=True)
+                .filter(F.col("batch").isin(self.meta().stats_batches)))
+
     def termstats(self, spark: SparkSession) -> DataFrame:
         """(term, df, cf) — merge-on-read over per-batch delta
         partitions. Appends write ONLY their own delta (aggregated from
         the new shards); the reader sums committed partitions. df/cf
-        are additive, term_dfs reads are term-filtered (the filter
-        pushes below this aggregate to the parquet scan), and
-        compact_index folds all deltas back into one partition — so
-        per-append cost is O(new docs), never O(index).
-
-        Gate: only partitions named in meta.stats_batches (the commit
-        record) participate, hiding crashed-append deltas.
-        ignoreMissingFiles covers a reader planned against an older
-        meta racing the post-fold vacuum."""
-        df = spark.read.option("ignoreMissingFiles", "true") \
-            .parquet(str(self.path / "termstats"))
-        return (df.filter(F.col("batch").isin(self.meta().stats_batches))
+        are additive, and compact_index folds all deltas back into one
+        partition — so per-append cost is O(new docs), never
+        O(index)."""
+        return (self._termstats_deltas(spark)
                 .groupBy("term")
                 .agg(F.sum("df").cast("long").alias("df"),
                      F.sum("cf").cast("long").alias("cf")))
@@ -352,24 +403,23 @@ class IndexStore:
         meta = self.meta()
         if not meta.delete_batches:
             return spark.range(0).select(F.col("id").alias("doc_id"))
-        df = spark.read.option("ignoreMissingFiles", "true") \
-            .parquet(str(self.path / "deletes"))
+        df = self._read(spark, "deletes", ignore_missing=True)
         return df.filter(F.col("batch").isin(meta.delete_batches)) \
             .select("doc_id")
 
-    def deletes_routed(self, spark: SparkSession) -> DataFrame | None:
-        """Shard-routed tombstones (shard, doc_id) when EVERY committed
-        delete batch has a routed mirror, else None (caller falls back
-        to the query-time broadcast range join — pre-v8 stores only).
-        The mirror is written in the same commit as the delete batch,
-        so the snapshot gate is the same meta list."""
-        meta = self.meta()
+    def deletes_routed(self, spark: SparkSession,
+                       meta: IndexMeta | None = None) -> DataFrame | None:
+        """Committed tombstones routed to their doc-range shard —
+        (shard, doc_id), or None when the index has no committed
+        deletes (the common case: the query plan is then identical to
+        a delete-free engine). Every delete commit writes this mirror
+        next to its ``deletes/`` batch, so routing costs a plain
+        partition-pruned scan here — no range join per query. Same
+        snapshot gate as deletes()."""
+        meta = meta or self.meta()
         if not meta.delete_batches:
             return None
-        if not set(meta.delete_batches) <= set(meta.routed_batches):
-            return None
-        df = spark.read.option("ignoreMissingFiles", "true") \
-            .parquet(str(self.path / "deletes_routed"))
+        df = self._read(spark, "deletes_routed", ignore_missing=True)
         return df.filter(F.col("batch").isin(meta.delete_batches)) \
             .select("shard", "doc_id")
 
@@ -381,8 +431,7 @@ class IndexStore:
         meta = self.meta()
         if not meta.purged_batches:
             return spark.range(0).select(F.col("id").alias("doc_id"))
-        df = spark.read.option("ignoreMissingFiles", "true") \
-            .parquet(str(self.path / "purged"))
+        df = self._read(spark, "purged", ignore_missing=True)
         return df.filter(F.col("batch").isin(meta.purged_batches)) \
             .select("doc_id")
 
@@ -393,17 +442,26 @@ class IndexStore:
         group per file). Shards partition the id space into disjoint
         contiguous ranges, so tombstones route to exactly one shard by
         a range join against this tiny frame."""
-        from .indexer import DOCSTATS_TERM
         return (self.segments(spark)
                 .filter(F.col("term") == F.lit(DOCSTATS_TERM))
                 .groupBy("shard")
                 .agg(F.min("first_doc").alias("lo"),
                      F.max("last_doc").alias("hi")))
 
+    def _docmap_schema(self, spark: SparkSession,
+                       meta: IndexMeta) -> StructType:
+        """The docmap's columns follow the corpus, so its schema is
+        inferred — once per handle and build, like the term_dfs memo."""
+        if self._docmap_schema_build != meta.build_id:
+            self._docmap_schema_cache = spark.read.parquet(
+                str(self.path / "docmap")).schema
+            self._docmap_schema_build = meta.build_id
+        return self._docmap_schema_cache
+
     def docmap(self, spark: SparkSession) -> DataFrame:
         meta = self.meta()
-        df = spark.read.option("ignoreMissingFiles", "true") \
-            .parquet(str(self.path / "docmap"))
+        df = self._read(spark, "docmap", ignore_missing=True,
+                        schema=self._docmap_schema(spark, meta))
         return (df.filter(F.col("batch")
                           .isin(self._committed_data_parts(meta)))
                 .filter(F.col("doc_id") < meta.n_docs))
@@ -445,17 +503,24 @@ class IndexStore:
                  build_id: str | None = None) -> dict:
         """{term: df} for ``terms`` (0 for absent terms), served from a
         bounded driver-side memo keyed by build_id; only misses hit
-        Spark. Memory stays O(distinct queried terms), capped."""
+        Spark. Memory stays O(distinct queried terms), capped.
+
+        A miss is ONE scan job: the committed per-batch delta rows of
+        the missed terms (term filter pushed into parquet) are summed
+        here on the driver — at most |missed| x |stats_batches| rows,
+        and appends keep stats_batches <= fold_stats_every + 1 — so
+        planning needs no groupBy shuffle."""
         bid = build_id or self.meta().build_id
         if bid != self._df_cache_build:
             self._df_cache = {}
             self._df_cache_build = bid
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = self.termstats(spark) \
-                .filter(F.col("term").isin(missing)) \
-                .select("term", "df").collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
+            found: dict = {}
+            for r in (self._termstats_deltas(spark)
+                      .filter(F.col("term").isin(missing))
+                      .select("term", "df").collect()):
+                found[r["term"]] = found.get(r["term"], 0) + int(r["df"])
             if len(self._df_cache) < (1 << 20):
                 for t in missing:
                     self._df_cache[t] = found.get(t, 0)
@@ -572,7 +637,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
         # independent of stage B — overlap the two jobs (Spark schedules
         # concurrent jobs from separate threads); failures re-raise at
         # the join so a dead docmap write can't commit silently
-        import threading
+        from pyspark import InheritableThread
 
         def _docmap_wrapped():
             try:
@@ -580,8 +645,8 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
             except BaseException as e:  # noqa: BLE001 — re-raised at join
                 docmap_errs.append(e)
 
-        docmap_thread = threading.Thread(target=_docmap_wrapped,
-                                         daemon=True)
+        docmap_thread = InheritableThread(target=_docmap_wrapped,
+                                          daemon=True)
         docmap_thread.start()
     if n_shards is None:
         # floor = 2 encode waves: range routing (indexer round 6) gives
@@ -645,7 +710,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
             tokens = tokenize_corpus(docs, cfg, syn, text_col=text_col,
                                      token_filter=token_filter).persist()
             tokens.count()  # materialize before the big-batch conf below
-            doc_stats = spark.read.parquet(str(store.path / "docstats")) \
+            doc_stats = store._read(spark, "docstats") \
                 .select("doc_id", "dl")
             segs = encode_segments_from_tokens(
                 tokens, doc_stats, n_docs=n_docs, n_shards=n_shards,
@@ -680,7 +745,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
     # independent scans of the written segments, scheduled concurrently
     # from threads (Spark runs concurrent jobs; overlapping them removes
     # most of the per-job serial floor that dominates small builds) ----
-    segs_all = spark.read.parquet(seg_dir)
+    segs_all = store._read(spark, "segments")
     ts_dir = store.path / "termstats"
     build_id = uuid.uuid4().hex
     stats_out: list = []
@@ -689,8 +754,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
         if not missing:
             return
         stats_out.extend(
-            spark.read.parquet(seg_dir)
-            .filter(F.col("shard").isin(missing))
+            segs_all.filter(F.col("shard").isin(missing))
             .groupBy("shard")
             .agg(F.count("*").alias("rows"),
                  (F.sum(F.length("doc_bytes")) +
@@ -752,7 +816,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
         if obs_dl:
             total_dl = obs_dl[0]   # observed during the docstats write
         else:                      # resume / term layout: read stats
-            row = spark.read.parquet(str(store.path / "docstats")) \
+            row = store._read(spark, "docstats") \
                 .agg(F.sum("dl").alias("total_dl")).collect()[0]
             total_dl = int(row["total_dl"] or 0)
     bid = manifest["shards"].get("0", {}).get("build_id", uuid.uuid4().hex)
@@ -796,7 +860,7 @@ def new_shard_segments(spark: SparkSession, store: IndexStore,
     invisible to queries (shard < meta.n_shards) and must be invisible
     to the stats refresh too, or their df/cf/dl would leak into the
     committed delta."""
-    df = spark.read.parquet(str(store.path / "segments")) \
+    df = store._read(spark, "segments") \
         .filter(F.col("shard") >= old_shards)
     if new_total_shards is not None:
         df = df.filter(F.col("shard") < new_total_shards)
@@ -1041,7 +1105,7 @@ def _append_locked(spark, store, new_corpus, syn, docs_per_shard,
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("batch").parquet(str(store.path / "docstats")))
-        row = spark.read.parquet(str(store.path / "docstats")) \
+        row = store._read(spark, "docstats") \
             .filter(F.col("batch") == batch_part) \
             .agg(F.sum("dl").alias("s")).collect()[0]
         dl_sum.append(int(row["s"] or 0))
@@ -1115,10 +1179,9 @@ def _append_locked(spark, store, new_corpus, syn, docs_per_shard,
         # commit below.
         fold_part = f"fold-at-{n_docs}"
         ts_root = store.path / "termstats"
-        srcs = [str(ts_root / f"batch={b}") for b in stats_batches
+        srcs = [b for b in stats_batches
                 if (ts_root / f"batch={b}").exists()]
-        (spark.read.option("basePath", str(ts_root))
-         .parquet(*srcs)
+        (store._read(spark, "termstats", parts=srcs)
          .groupBy("term")
          .agg(F.sum("df").cast("long").alias("df"),
               F.sum("cf").cast("long").alias("cf"))
@@ -1183,8 +1246,6 @@ def compact_index(spark: SparkSession, store: IndexStore, out_dir: str,
     over live docs only, exactly Lucene's merge applying liveDocs —
     delegated to ``deletes.purge_merge``.
     """
-    from .indexer import DOCSTATS_TERM  # local import to avoid cycle noise
-
     meta = store.meta()
     if meta.delete_batches:
         from .deletes import purge_merge
@@ -1247,7 +1308,7 @@ def compact_index(spark: SparkSession, store: IndexStore, out_dir: str,
          .parquet(str(dst.path / "purged")))
 
     build_id = uuid.uuid4().hex
-    stats = (spark.read.parquet(str(dst.path / "segments"))
+    stats = (dst._read(spark, "segments")
              .groupBy("shard")
              .agg(F.count("*").alias("rows"),
                   (F.sum(F.length("doc_bytes")) + F.sum(F.length("tf_bytes"))

@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .index_store import IndexStore
-from .query import QueryPlan, _apply_msm, _wand_topk, analyze_query, idf
+from .query import (QueryPlan, _apply_msm, _wand_topk, analyze_query, idf,
+                    top_k)
 from .synonyms import SynonymDict
 from .tokenizer import TokenizerConfig
 
@@ -152,5 +153,5 @@ def search_indices(spark: SparkSession,
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    return u.orderBy(F.desc("score"), F.asc("index"),
-                     F.asc("doc_id")).limit(k)
+    return top_k(u, k, sum(m.n_docs for m in metas.values()),
+                 F.desc("score"), F.asc("index"), F.asc("doc_id"))

@@ -171,6 +171,18 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def top_k(df: DataFrame, k: int, n_rows: int, *order) -> DataFrame:
+    """The first ``k`` rows of ``df`` in ``order`` (default score DESC,
+    doc_id ASC) — the one cut for every user-sized k/size. ``k`` is
+    clamped to ``n_rows``, a bound on ``df``'s row count (the store's
+    doc-id space ``meta.n_docs`` for per-doc frames and per-value
+    buckets): Spark's TakeOrderedAndProject reserves ~2·k heap slots
+    per partition before it reads a row, so an "all matches" k such as
+    10**9 would exhaust the heap on any store."""
+    order = order or (F.desc("score"), F.asc("doc_id"))
+    return df.orderBy(*order).limit(min(k, n_rows))
+
+
 def plan_query(spark: SparkSession, store: IndexStore, text: str,
                syn: SynonymDict | None = None,
                cfg: TokenizerConfig | None = None,
@@ -480,41 +492,14 @@ def score_naive(spark: SparkSession, store: IndexStore, text: str,
     """Pure declarative BM25 top-k: ``score_matches`` + orderBy/limit.
     Catalyst handles partial aggregation and the top-k sort; this is
     the cross-check for WAND."""
-    return (score_matches(spark, store, text, mode, syn, cfg, postings,
-                          groups, plan, doc_where)
-            .select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    return top_k(score_matches(spark, store, text, mode, syn, cfg,
+                               postings, groups, plan, doc_where)
+                 .select("doc_id", "score"), k, store.meta().n_docs)
 
 
 # --------------------------------------------------------------------
 # block-max WAND (E10 primary path)
 # --------------------------------------------------------------------
-
-def _deletes_by_shard(spark: SparkSession, store: IndexStore,
-                      meta=None) -> DataFrame | None:
-    """Tombstoned doc_ids routed to their shard — (shard, doc_id), or
-    None when the index has no committed deletes (the common case: the
-    query plan is then byte-identical to a delete-free engine). Routing
-    is a broadcast range join against the tiny shard-range frame —
-    tombstones flow executor-to-executor, never through the driver, and
-    each shard worker receives only ITS tombstones (Lucene's
-    per-segment liveDocs shape)."""
-    meta = meta or store.meta()
-    if not meta.delete_batches:
-        return None
-    # fast path: every delete commit since v8 also wrote a shard-routed
-    # mirror, so the hot serving path is a plain parquet scan — no
-    # range join, no shard_doc_ranges job per query (round-4 task #5)
-    routed = store.deletes_routed(spark)
-    if routed is not None:
-        return routed
-    ranges = store.shard_doc_ranges(spark)
-    return (store.deletes(spark)
-            .join(F.broadcast(ranges),
-                  (F.col("doc_id") >= F.col("lo"))
-                  & (F.col("doc_id") <= F.col("hi")))
-            .select("shard", "doc_id"))
-
 
 def _del_array(right: pd.DataFrame) -> np.ndarray | None:
     return np.sort(right["doc_id"].to_numpy().astype(np.int64)) \
@@ -550,7 +535,7 @@ def _deletes_runtime(spark: SparkSession, store: IndexStore, meta=None):
         cached = getattr(store, "_dels_bcast", None)
         if cached is not None and cached[0] == key:
             return ("map", cached[1])
-        rows = _deletes_by_shard(spark, store, meta).collect()
+        rows = store.deletes_routed(spark, meta).collect()
         m: dict[int, list] = {}
         for r in rows:
             m.setdefault(int(r["shard"]), []).append(int(r["doc_id"]))
@@ -558,7 +543,7 @@ def _deletes_runtime(spark: SparkSession, store: IndexStore, meta=None):
             {s: np.sort(np.asarray(v, np.int64)) for s, v in m.items()})
         store._dels_bcast = (key, bc)
         return ("map", bc)
-    return ("df", _deletes_by_shard(spark, store, meta))
+    return ("df", store.deletes_routed(spark, meta))
 
 
 def _route_ids(spark: SparkSession, store: IndexStore,
@@ -1482,7 +1467,7 @@ def _wand_topk(spark: SparkSession, store: IndexStore, meta,
     topk = _masked_apply(spark, store, meta, blocks, fn,
                          "doc_id long, score double", doc_where,
                          allow_df, exclude_df)
-    return topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return top_k(topk, k, meta.n_docs)
 
 
 def search_batch(spark: SparkSession, store: IndexStore,
@@ -1494,7 +1479,7 @@ def search_batch(spark: SparkSession, store: IndexStore,
                  after_list: list[tuple | None] | None = None,
                  plans: list[QueryPlan] | None = None,
                  doc_where: str | None = None) -> DataFrame:
-    """Answer MANY queries in one Spark job: one planning pass, one
+    """Answer MANY queries in one WAND pass: one planning pass, one
     blocks scan for the union of all query terms, per-shard workers run
     every query's WAND against their slice. Amortizes per-job overhead
     (~1s) across the batch — the realistic offline-serving shape.
@@ -1507,13 +1492,13 @@ def search_batch(spark: SparkSession, store: IndexStore,
 
     ``after_list`` (one ``(score, doc_id)`` cursor or None per query)
     is per-query search_after pagination, same semantics as
-    ``search(after=...)`` — page N+1 of a batch costs the same one
-    job as page 1.
+    ``search(after=...)`` — page N+1 of a batch costs the same jobs
+    as page 1.
 
     ``plans`` (mutually exclusive with texts/groups_list) serves
     PRE-BUILT QueryPlans — notably kinds-tagged bool plans from
     ``plan_bool``: a mixed batch of bool/msm/plain queries runs in the
-    same single job (each worker applies each plan's occur tags; the
+    same single pass (each worker applies each plan's occur tags; the
     batch mode arg is ignored for kinds-tagged plans)."""
     meta = store.meta()
     cfg = cfg or TokenizerConfig(**meta.cfg)
@@ -2265,11 +2250,11 @@ def terms_agg(spark: SparkSession, store: IndexStore, field: str,
                     groups, min_should_match, plan,
                     doc_where=doc_where)
     dm = store.docmap(spark).select("doc_id", field)
-    return (ids.join(dm, "doc_id")
-            .groupBy(field)
-            .agg(F.count("*").alias("doc_count"))
-            .orderBy(F.desc("doc_count"), F.asc(field))
-            .limit(size))
+    return top_k(ids.join(dm, "doc_id")
+                 .groupBy(field)
+                 .agg(F.count("*").alias("doc_count")),
+                 size, store.meta().n_docs,
+                 F.desc("doc_count"), F.asc(field))
 
 
 def _field_values(spark: SparkSession, store: IndexStore,
@@ -2530,14 +2515,14 @@ def terms_stats_agg(spark: SparkSession, store: IndexStore,
         j = ids.join(_field_values(spark, store, field), "doc_id") \
                .join(_field_values(spark, store, metric_field),
                      "doc_id")
-    return (j.groupBy(F.col(field).alias("key"))
-            .agg(F.count("*").cast("long").alias("doc_count"),
-                 F.min(metric_field).cast("long").alias("min"),
-                 F.max(metric_field).cast("long").alias("max"),
-                 F.round(F.avg(metric_field), 6).alias("avg"),
-                 F.sum(metric_field).cast("long").alias("sum"))
-            .orderBy(F.desc("doc_count"), F.asc("key"))
-            .limit(size))
+    return top_k(j.groupBy(F.col(field).alias("key"))
+                 .agg(F.count("*").cast("long").alias("doc_count"),
+                      F.min(metric_field).cast("long").alias("min"),
+                      F.max(metric_field).cast("long").alias("max"),
+                      F.round(F.avg(metric_field), 6).alias("avg"),
+                      F.sum(metric_field).cast("long").alias("sum")),
+                 size, store.meta().n_docs,
+                 F.desc("doc_count"), F.asc("key"))
 
 
 def composite_agg(spark: SparkSession, store: IndexStore, field: str,
@@ -2567,9 +2552,9 @@ def composite_agg(spark: SparkSession, store: IndexStore, field: str,
     j = ids.join(v, "doc_id")
     if after is not None:
         j = j.filter(F.col(field) > F.lit(after))
-    return (j.groupBy(field)
-            .agg(F.count("*").cast("long").alias("doc_count"))
-            .orderBy(F.asc(field)).limit(size))
+    return top_k(j.groupBy(field)
+                 .agg(F.count("*").cast("long").alias("doc_count")),
+                 size, store.meta().n_docs, F.asc(field))
 
 
 def search_sorted(spark: SparkSession, store: IndexStore,
@@ -2630,7 +2615,7 @@ def search_sorted(spark: SparkSession, store: IndexStore,
                 ci = ci & (F.col(keys[j]) == F.lit(after[j]))
             cond = cond | ci
         df = df.filter(cond)
-    return (df.orderBy(*order).limit(k)
+    return (top_k(df, k, store.meta().n_docs, *order)
             .select("doc_id", *[f for f, _ in sort]))
 
 
@@ -2782,8 +2767,8 @@ def more_like_this(spark: SparkSession, store: IndexStore, like,
                                            else 0),
                   mode="or", groups=[[t] for t in terms])
     if exclude is not None:
-        hits = (hits.filter(F.col("doc_id") != exclude)
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+        hits = top_k(hits.filter(F.col("doc_id") != exclude), k,
+                     store.meta().n_docs)
     return hits
 
 
@@ -2847,9 +2832,8 @@ def rescore(spark: SparkSession, store: IndexStore, text: str,
     # wrong)
     final = F.when(F.col("fscore").isNull(), p) \
         .otherwise(combiner(p, s))
-    return (prim.join(sec, "doc_id", "left")
-            .select("doc_id", final.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+    return top_k(prim.join(sec, "doc_id", "left")
+                 .select("doc_id", final.alias("score")), k, meta.n_docs)
 
 
 def _field_group_scores(spark: SparkSession, fstore: IndexStore, meta,
@@ -2961,7 +2945,7 @@ def search_fields_scan(spark: SparkSession, fields: dict, text: str,
     out = _fields_total(spark, planned, mode, None,
                         combine="dismax" if type == "best_fields"
                         else "sum", tie_breaker=tie_breaker)
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return top_k(out, k, max(m.n_docs for *_, m in planned))
 
 
 def search_fields(spark: SparkSession, fields: dict, text: str,
@@ -3048,8 +3032,8 @@ def search_fields(spark: SparkSession, fields: dict, text: str,
         totals = _fields_total(spark, planned, mode, sorted(cand),
                                combine=combine,
                                tie_breaker=tie_breaker)
-        top = totals.orderBy(F.desc("score"),
-                             F.asc("doc_id")).limit(k).collect()
+        top = top_k(totals, k,
+                    max(m.n_docs for *_, m in planned)).collect()
         if exhausted or (len(top) == k and top[-1].score > tau):
             return spark.createDataFrame(
                 [(int(r.doc_id), float(r.score)) for r in top],

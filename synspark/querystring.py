@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from .index_store import IndexStore
 from .multiterm import fuzzy_terms
 from .query import (_wand_topk, analyze_query, match_ids, plan_bool,
-                    prefix_terms)
+                    prefix_terms, top_k)
 from .synonyms import SynonymDict
 from .tokenizer import TokenizerConfig
 
@@ -464,4 +464,4 @@ def _query_string_exhaustive(spark: SparkSession, store: IndexStore,
     if allow_df is not None:
         tot = tot.join(allow_df.select("doc_id").distinct(),
                        "doc_id", "semi")
-    return tot.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return top_k(tot, k, store.meta().n_docs)

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .index_store import IndexStore
-from .query import _field_values, match_ids, score_matches
+from .query import _field_values, match_ids, score_matches, top_k
 from .synonyms import SynonymDict
 from .tokenizer import TokenizerConfig
 
@@ -75,11 +75,12 @@ def search_collapsed(spark: SparkSession, store: IndexStore,
     vals = _field_values(spark, store, field)
     w = Window.partitionBy(field).orderBy(F.desc("score_r"),
                                           F.asc("doc_id"))
-    return (scored.join(vals, "doc_id")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id", field, "score_r")
-            .orderBy(F.desc("score_r"), F.asc("doc_id")).limit(k))
+    return top_k(scored.join(vals, "doc_id")
+                 .withColumn("_rn", F.row_number().over(w))
+                 .filter(F.col("_rn") == 1)
+                 .select("doc_id", field, "score_r"),
+                 k, store.meta().n_docs,
+                 F.desc("score_r"), F.asc("doc_id"))
 
 
 def top_hits_agg(spark: SparkSession, store: IndexStore, field: str,
@@ -107,9 +108,9 @@ def top_hits_agg(spark: SparkSession, store: IndexStore, field: str,
             .withColumn("rank", F.row_number().over(w))
             .withColumn("doc_count", F.count("*").over(part))
             .filter(F.col("rank") <= n_hits))
-    buckets = (hits.select(field, "doc_count").distinct()
-               .orderBy(F.desc("doc_count"), F.asc(field))
-               .limit(n_buckets))
+    buckets = top_k(hits.select(field, "doc_count").distinct(),
+                    n_buckets, store.meta().n_docs,
+                    F.desc("doc_count"), F.asc(field))
     return (hits.join(F.broadcast(buckets.select(field)), field)
             .select(field, F.col("doc_count").cast("long"),
                     "rank", "doc_id", "score_r")
@@ -165,10 +166,11 @@ def function_score(spark: SparkSession, store: IndexStore, text: str,
         * F.coalesce(F.col(field).cast("double"),
                      F.lit(float(missing))))
     combined = _BOOST_MODES[boost_mode](F.col("score"), fv)
-    return (scored.join(vals, "doc_id", "left")
-            .withColumn("score_r", F.round(combined, 6))
-            .select("doc_id", "score_r")
-            .orderBy(F.desc("score_r"), F.asc("doc_id")).limit(k))
+    return top_k(scored.join(vals, "doc_id", "left")
+                 .withColumn("score_r", F.round(combined, 6))
+                 .select("doc_id", "score_r"),
+                 k, store.meta().n_docs,
+                 F.desc("score_r"), F.asc("doc_id"))
 
 
 def constant_score(spark: SparkSession, store: IndexStore,
@@ -190,8 +192,8 @@ def constant_score(spark: SparkSession, store: IndexStore,
     ids = match_ids(spark, store, text, mode, syn=syn, cfg=cfg,
                     groups=groups, min_should_match=min_should_match,
                     plan=plan, doc_where=doc_where)
-    return (ids.withColumn("score_r", F.lit(float(boost)))
-            .orderBy(F.asc("doc_id")).limit(k)
+    return (top_k(ids.withColumn("score_r", F.lit(float(boost))),
+                  k, store.meta().n_docs, F.asc("doc_id"))
             .select("doc_id", "score_r"))
 
 
@@ -217,12 +219,13 @@ def boosting(spark: SparkSession, store: IndexStore,
     neg = (match_ids(spark, store, negative, negative_mode, syn=syn,
                      cfg=cfg)
            .withColumn("_neg", F.lit(True)))
-    return (scored.join(neg, "doc_id", "left")
-            .withColumn(
-                "score_r",
-                F.round(F.when(F.col("_neg"),
-                               F.col("score")
-                               * F.lit(float(negative_boost)))
-                        .otherwise(F.col("score")), 6))
-            .select("doc_id", "score_r")
-            .orderBy(F.desc("score_r"), F.asc("doc_id")).limit(k))
+    return top_k(scored.join(neg, "doc_id", "left")
+                 .withColumn(
+                     "score_r",
+                     F.round(F.when(F.col("_neg"),
+                                    F.col("score")
+                                    * F.lit(float(negative_boost)))
+                             .otherwise(F.col("score")), 6))
+                 .select("doc_id", "score_r"),
+                 k, store.meta().n_docs,
+                 F.desc("score_r"), F.asc("doc_id"))

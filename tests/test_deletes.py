@@ -286,45 +286,24 @@ def test_deletes_routing_plan_shape(spark, tmp_path_factory):
     runs ONCE at delete-commit time; the QUERY-side frame must be a
     plain partition-pruned scan of the routed mirror — no join, no
     exchange, no per-query shard_doc_ranges job (at a million live
-    tombstones the per-query routing cost 8-11s vs 5.3s clean). The
-    pre-v8 fallback (no routed mirror) must keep the old shape: ranges
-    broadcast, tombstones never driver-side."""
-    from dataclasses import asdict
-
-    from synspark.index_store import IndexMeta
-    from synspark.query import _deletes_by_shard
-
+    tombstones the per-query routing cost 8-11s vs 5.3s clean)."""
     root = tmp_path_factory.mktemp("del_plan")
     store = build_index(spark, _corpus(spark, n=80), str(root / "idx"),
                         cfg=CFG, n_shards=2, resume=False)
+    assert store.deletes_routed(spark) is None       # no deletes yet
     delete_docs(spark, store, doc_ids=[1, 5, 9])
 
-    # fast path: joinless pruned scan of the write-time-routed mirror
-    dels = _deletes_by_shard(spark, store)
+    dels = store.deletes_routed(spark)
     plan = dels._jdf.queryExecution().executedPlan().toString()
     assert "deletes_routed" in plan
     assert "Join" not in plan and "Exchange" not in plan
     assert "batch#" in plan and "del-0" in plan      # partition gate
     routed_rows = {(r.shard, r.doc_id) for r in dels.collect()}
     assert {d for _, d in routed_rows} == {1, 5, 9}
-
-    # legacy fallback (store committed before the routed mirror
-    # existed): drop the routed record from meta — the query must
-    # reconstruct routing with the ranges frame on the BROADCAST side
-    meta = store.meta()
-    store._write_meta(IndexMeta(**{**asdict(meta),
-                                   "routed_batches": []}))
-    dels = _deletes_by_shard(spark, store)
-    plan = dels._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin BuildRight" in plan \
-        or "BroadcastHashJoin" in plan
-    # broadcast side = the aggregated ranges, not the tombstones
-    assert plan.index("deletes") < plan.index("BroadcastExchange") \
-        < plan.index("segments")
-    assert "batch#" in plan and "del-0" in plan      # partition gate
-    assert "EqualTo(term," in plan                   # pushed pseudo-term
-    # both paths route identically
-    assert {(r.shard, r.doc_id) for r in dels.collect()} == routed_rows
+    # each tombstone sits in the shard whose doc range holds it
+    ranges = {r.shard: (r.lo, r.hi)
+              for r in store.shard_doc_ranges(spark).collect()}
+    assert all(ranges[s][0] <= d <= ranges[s][1] for s, d in routed_rows)
 
 
 def test_match_ids_and_delete_by_query(spark, tmp_path_factory):

@@ -229,8 +229,8 @@ def test_wand_window_is_plan_carried(spark, merged):
         .select("term", "shard", "first_doc", "last_doc", "n_docs",
                 "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
                 "pos_bytes", "pl_bytes").toPandas()
-    from synspark.query import _deletes_by_shard, _del_array
-    dels = _deletes_by_shard(spark, store).toPandas()
+    from synspark.query import _del_array
+    dels = store.deletes_routed(spark).toPandas()
     out = []
     for shard, pdf in blocks.groupby("shard"):
         d = dels[dels["shard"] == shard]
